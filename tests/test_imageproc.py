@@ -190,6 +190,19 @@ def test_integral_image_int64_above_int32_range():
     assert integral_image(small).dtype == np.int32  # fast path kept
 
 
+def test_rotate_mask_nn_multi_int64_above_int32_range():
+    """Wide masks (max(h, w) > 2^14) must rotate through the int64 path:
+    the int32 fixed-point products overflow there and sample garbage."""
+    from text_extraction_spark.engine.imageproc import rotate_mask_nn, rotate_mask_nn_multi
+
+    rng = np.random.Generator(np.random.PCG64(5))
+    mask = (rng.random((16, 70000)) < 0.3).astype(np.uint8)
+    angles = [0.0, 0.01]
+    got = rotate_mask_nn_multi(mask, angles)
+    for k, a in enumerate(angles):
+        assert np.array_equal(got[k], rotate_mask_nn(mask, a)), a
+
+
 def test_raw_rgb8_and_color_png_decode():
     """A7 color path (round 2): 3-channel raw and truecolor PNG both
     luma-convert; channel-replicated gray maps back to the EXACT gray
@@ -338,10 +351,12 @@ def test_batch_media_extract_equals_per_item():
     from text_extraction_spark.pipeline import _extract_media_batch, _extract_one_media
 
     media = [corpus.gen_media(f"img-{i:08d}-0") for i in range(40)]
-    widths = [m.width for m in media] + [10]
-    heights = [m.height for m in media] + [10]
-    fmts = [m.fmt for m in media] + ["png"]
-    datas = [m.data for m in media] + [b"not a png"]
+    # last two: a corrupt PNG, and an empty raw payload that decodes to a
+    # 0×0 image whose batched threshold raises (per-row isolation)
+    widths = [m.width for m in media] + [10, 0]
+    heights = [m.height for m in media] + [10, 0]
+    fmts = [m.fmt for m in media] + ["png", "raw-u8"]
+    datas = [m.data for m in media] + [b"not a png", b""]
     got = _extract_media_batch(widths, heights, fmts, datas)
     want = [
         _extract_one_media(w, h, f, d)

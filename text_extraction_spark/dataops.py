@@ -25,8 +25,6 @@ candidate set grows linearly (bucketing/banding), not quadratically.
 
 from __future__ import annotations
 
-from typing import Iterator
-
 import numpy as np
 import pandas as pd
 from pyspark.sql import Window
@@ -364,22 +362,10 @@ def d05(spark, sf):
         F.col("vec_id").alias("q_id"), F.col("embedding").alias("qe")
     )
     j = e.crossJoin(F.broadcast(qv)).filter(F.col("vec_id") != F.col("q_id"))
-    dot = F.aggregate(
-        F.zip_with("embedding", "qe", lambda x, y: x.cast("double") * y.cast("double")),
-        F.lit(0.0),
-        lambda acc, v: acc + v,
-    )
-    norm = lambda c: F.sqrt(
-        F.aggregate(
-            F.transform(c, lambda x: x.cast("double") * x.cast("double")),
-            F.lit(0.0),
-            lambda acc, v: acc + v,
-        )
-    )
     sims = j.select(
         "q_id",
         "vec_id",
-        F.round(dot / norm(F.col("embedding")) / norm(F.col("qe")), 4).alias("cosine"),
+        F.round(_cosine(F.col("embedding"), F.col("qe")), 4).alias("cosine"),
     )
     w = Window.partitionBy("q_id").orderBy(F.col("cosine").desc(), F.col("vec_id"))
     return sims.withColumn("rn", F.row_number().over(w)).filter(F.col("rn") <= 5).select(
@@ -423,51 +409,143 @@ def _adaptive_planes(n_vecs: int) -> int:
     return min(_LSH_MAX_PLANES, max(_LSH_MIN_PLANES, raw))
 
 
-def _collect_id_emb(df) -> tuple[list[int], list[np.ndarray]]:
-    """Driver-side (vec_id-sorted ids, float64 vectors) from a bounded
-    (vec_id, embedding) DataFrame via ONE Arrow transfer (round 7: the
-    py4j row collect of a few-thousand-row trainer sample was ~0.3 s
-    per call). Values are identical to the row collect: Arrow delivers
-    the float32 payload, which widens to the exact same doubles."""
-    pdf = df.toPandas().sort_values("vec_id")
-    return (
-        [int(x) for x in pdf["vec_id"]],
-        [np.asarray(v, dtype=np.float64) for v in pdf["embedding"]],
+# ------------------------------------------------------- the vector plane
+# Every ANN/dedup entry validates its store ONCE (_valid_store: the
+# emb_stats job counts the rejects, a filter drops them only when there
+# are any), so every Python kernel below takes a dense (n, d) float64
+# matrix from the one strict _arrow_list_to_2d and scores it with the one
+# numpy fold (_fold_norms/_fold_dots/_fold_grid). The JVM fold (_jvm_dot,
+# _jvm_norm, _cosine) stays the reference the numpy fold is tested
+# against bit for bit.
+
+
+def _valid_embedding(dim: int, col: str = "embedding"):
+    """THE embedding validity predicate: a non-null list of exactly `dim`
+    elements, none of them null — the rows whose JVM fold is non-null
+    against a canonical-dim partner. NaN elements stay valid (NaN is a
+    value; Spark's NaN ordering applies to their cosines). Never null."""
+    c = F.col(col)
+    return F.coalesce(
+        (F.size(c) == dim) & F.forall(c, lambda x: x.isNotNull()), F.lit(False)
     )
 
 
 def emb_stats(df, col: str = "embedding", id_col: str = "vec_id"):
-    """(n_rows, canonical_dim, n_dropped) in ONE Spark job (round 6 —
+    """(n_rows, canonical_dim, n_rejected) in ONE Spark job (round 6 —
     VERDICT r5 #4: the adaptive-sizing paths previously burned a
     min_by agg + a filter-count + a separate count(), three full store
     scans before any real work started). One groupBy over size(col)
-    yields a handful of (dim, cnt, min_id) rows; everything derives
-    driver-side. Canonical dim = the dim of the globally smallest id —
-    the same min_by semantics as embedding_dim_and_dropped, so every
-    pinned floor keeps its exact behavior."""
+    yields a handful of (dim, cnt, min_id, holes) rows; everything
+    derives driver-side. Canonical dim = the dim of the smallest id
+    among non-empty lists (deterministic at any cluster size);
+    n_rejected counts the rows failing _valid_embedding(canonical_dim):
+    wrong dim, null list, or a null element inside a canonical-dim
+    list."""
     rows = (
         df.groupBy(F.size(col).alias("dim"))
-        .agg(F.count(F.lit(1)).alias("cnt"), F.min(id_col).alias("min_id"))
+        .agg(
+            F.count(F.lit(1)).alias("cnt"),
+            F.min(id_col).alias("min_id"),
+            F.count_if(~F.forall(col, lambda x: x.isNotNull())).alias("holes"),
+        )
         .collect()
     )
-    if not rows:
-        return 0, 0, 0
     n = int(sum(r["cnt"] for r in rows))
-    canon = min(rows, key=lambda r: r["min_id"])
-    return n, int(canon["dim"]), n - int(canon["cnt"])
+    sized = [r for r in rows if r["dim"] is not None and r["dim"] > 0]
+    if not sized:
+        return n, 0, n
+    canon = min(sized, key=lambda r: r["min_id"])
+    return n, int(canon["dim"]), n - int(canon["cnt"]) + int(canon["holes"])
 
 
-def embedding_dim_and_dropped(df, col: str = "embedding", id_col: str = "vec_id"):
-    """Canonical embedding dim (the dim of the smallest id — deterministic
-    at any cluster size) plus the COUNT of rows whose dim differs.
-    Round-3 fix (VERDICT r2 wrong #2): the ANN paths previously hardcoded
-    dim=64 and silently routed any other-dim row to bucket -1; a schema
-    drift on a real corpus would silently exclude rows from dedup/search.
-    Callers now derive dim from the data and surface the dropped count."""
-    dim = df.agg(F.min_by(F.size(col), id_col)).first()[0]
-    if dim is None:
-        return 0, 0
-    return int(dim), int(df.filter(F.size(col) != dim).count())
+def _valid_store(e, stats: tuple[int, int, int] | None = None, what: str = "ANN"):
+    """The single validation point of every ANN/dedup entry: (the rows
+    passing _valid_embedding(canonical dim), emb_stats). Rejected rows
+    are counted and warned about, never silently dropped (round-3 rule);
+    the filter is only planned when there are rejects, so a clean store
+    keeps its plan."""
+    import warnings
+
+    n, dim, rejected = emb_stats(e) if stats is None else stats
+    if rejected:
+        warnings.warn(
+            f"{what}: {rejected} rows dropped (embedding is not a "
+            f"{dim}-element list without nulls)",
+            stacklevel=3,
+        )
+        e = e.filter(_valid_embedding(dim))
+    return e, (n, dim, rejected)
+
+
+def _arrow_list_to_2d(col) -> np.ndarray:
+    """A validated embedding column → dense (n, d) float64 matrix, the
+    one conversion every Python kernel uses. `col` is the Arrow list
+    column of an Arrow batch (zero-copy flatten of the one contiguous
+    values buffer — no per-row objects) or the pandas view a pandas UDF
+    receives. Strict: a null list, a null element or a ragged row
+    raises, because kernels only ever see _valid_store output."""
+    if isinstance(col, pd.Series):
+        if not len(col):
+            return np.empty((0, 0), dtype=np.float64)
+        return np.stack(col.to_numpy()).astype(np.float64, copy=False)
+    if hasattr(col, "combine_chunks"):
+        col = col.combine_chunks()
+    vals = col.flatten()
+    if col.null_count or vals.null_count:
+        raise ValueError("embedding column holds nulls; validate it first")
+    n = len(col)
+    if not n:
+        return np.empty((0, 0), dtype=np.float64)
+    d = len(vals) // n
+    if (np.diff(col.offsets.to_numpy()) != d).any():
+        raise ValueError("ragged embedding column; validate it first")
+    return vals.to_numpy(zero_copy_only=False).reshape(n, d).astype(np.float64, copy=False)
+
+
+def _collect_id_emb(df) -> tuple[list[int], np.ndarray]:
+    """Driver-side (vec_id-sorted ids, (n, d) float64 matrix) from a
+    bounded, validated (vec_id, embedding) DataFrame via ONE Arrow
+    transfer (round 7: the py4j row collect of a few-thousand-row
+    trainer sample was ~0.3 s per call). Arrow delivers the float32
+    payload, which widens to the exact same doubles."""
+    tbl = df.select("vec_id", "embedding").toArrow().sort_by("vec_id")
+    return tbl.column("vec_id").to_pylist(), _arrow_list_to_2d(tbl.column("embedding"))
+
+
+def _fold_norms(X: np.ndarray) -> np.ndarray:
+    """Row norms with the JVM fold's float64 op order (_jvm_norm): x·x
+    accumulated left-to-right over the dim axis — one vectorized add per
+    dim keeps the per-row order exactly — then an IEEE correctly
+    rounded sqrt, the same in numpy and Java."""
+    acc = np.zeros(len(X), dtype=np.float64)
+    for j in range(X.shape[1]):
+        x = X[:, j]
+        acc += x * x
+    return np.sqrt(acc)
+
+
+def _fold_dots(A: np.ndarray, B: np.ndarray) -> np.ndarray:
+    """Row-aligned dots (A[i]·B[i]) in the JVM fold's op order (_jvm_dot).
+    A and B are DIM-MAJOR (d, n): row j is every pair's j-th element, so
+    callers pass a contiguous gather (M.T[:, idx]) or a transposed view."""
+    acc = np.zeros(A.shape[1], dtype=np.float64)
+    for j in range(A.shape[0]):
+        acc += A[j] * B[j]
+    return acc
+
+
+def _fold_grid(A: np.ndarray, B: np.ndarray, na: np.ndarray, nb: np.ndarray) -> np.ndarray:
+    """(n, m) cosine grid cos[i, k] = (A[i]·B[k]) / na[i] / nb[k] — the
+    JVM fold's op order (_cosine(a, b)): the dot accumulates
+    left-to-right over dims, division order dot / |a| / |b|, so every
+    double is bit-identical to the interpreted fold. A zero norm gives
+    NaN (0/0), which callers rank by Spark's NaN ordering; the JVM
+    division raises there under ANSI mode."""
+    acc = np.zeros((len(A), len(B)), dtype=np.float64)
+    for j in range(A.shape[1]):
+        acc += A[:, j][:, None] * B[:, j][None, :]
+    with np.errstate(divide="ignore", invalid="ignore"):
+        return acc / na[:, None] / nb[None, :]
 
 
 def _hyperplane_buckets_udf(dim: int, n_planes: int = _LSH_PLANES):
@@ -477,9 +555,8 @@ def _hyperplane_buckets_udf(dim: int, n_planes: int = _LSH_PLANES):
     (distinct id spaces per table, so a plain explode+equi-join unions
     the tables). Seeded per (dim, n_planes) — deterministic across
     partitions / executors; n_planes comes from _adaptive_planes so the
-    per-table bucket space scales with the store (round 5). Rows whose
-    dim differs get bucket -1 (filtered out downstream; the count is
-    surfaced by embedding_dim_and_dropped)."""
+    per-table bucket space scales with the store (round 5). Takes
+    validated rows only (_valid_store)."""
 
     @F.pandas_udf(ArrayType(LongType()))
     def buckets(embs: pd.Series) -> pd.Series:
@@ -488,25 +565,14 @@ def _hyperplane_buckets_udf(dim: int, n_planes: int = _LSH_PLANES):
         )
         weights = 1 << np.arange(n_planes, dtype=np.int64)
         base = (np.arange(_LSH_TABLES, dtype=np.int64) << n_planes)
-        out: list[list[int] | None] = []
-        ok_rows, mats = [], []
-        for i, e in enumerate(embs):
-            v = np.asarray(e, dtype=np.float64)
-            if v.shape == (dim,):
-                ok_rows.append(i)
-                mats.append(v)
-            out.append([-1] * _LSH_TABLES)
-        if mats:
-            proj = np.stack(mats) @ planes.T  # (B, tables·planes)
-            bits = (proj > 0).astype(np.int64).reshape(len(mats), _LSH_TABLES, n_planes)
-            ids = (bits * weights[None, None, :]).sum(axis=2) + base[None, :]
-            for row, i in enumerate(ok_rows):
-                out[i] = [int(x) for x in ids[row]]
-        return pd.Series(out)
+        if not len(embs):
+            return pd.Series([], dtype=object)
+        X = _arrow_list_to_2d(embs)
+        bits = (X @ planes.T > 0).astype(np.int64).reshape(len(X), _LSH_TABLES, n_planes)
+        ids = (bits * weights[None, None, :]).sum(axis=2) + base[None, :]
+        return pd.Series(ids.tolist())
 
     return buckets
-
-
 
 
 @q("d06_ann_lsh_bucketed")  # ⊘ rows-only (approximate; recall gated by d14)
@@ -538,93 +604,48 @@ def d06(spark, sf):
 _ANN_BUCKET_CAP = 64
 
 
-def _cosine(ca, cb):
-    """Exact double-precision cosine between two array columns, JVM-side
-    (zip_with + aggregate — no Python in the hot path)."""
-    dot = F.aggregate(
+def _jvm_dot(ca, cb):
+    """Exact double-precision dot of two array columns, JVM-side
+    (zip_with + aggregate, left-to-right). Null if either side is null,
+    has a null element, or the dims differ (zip_with pads with nulls)."""
+    return F.aggregate(
         F.zip_with(ca, cb, lambda x, y: x.cast("double") * y.cast("double")),
         F.lit(0.0),
         lambda acc, v: acc + v,
     )
-    norm = lambda c: F.sqrt(
+
+
+def _jvm_norm(c):
+    """Exact double-precision L2 norm of an array column, JVM-side."""
+    return F.sqrt(
         F.aggregate(
             F.transform(c, lambda x: x.cast("double") * x.cast("double")),
             F.lit(0.0),
             lambda acc, v: acc + v,
         )
     )
-    return dot / norm(ca) / norm(cb)
 
 
-def _cos_fold_f64(A: np.ndarray, B: np.ndarray) -> np.ndarray:
-    """Batch cosine with the SAME float64 operation order as the JVM
-    fold expressions (_cosine/_cosine_pre): dot, |a|², |b|² each
-    accumulate left-to-right over the dim axis (one vectorized add per
-    dim preserves the per-row op order exactly), sqrt is IEEE correctly
-    rounded in both numpy and Java, and the division order is
-    dot / |a| / |b| — so every double is bit-identical to the
-    interpreted fold it replaces (asserted by tests and the golden
-    oracle sweep)."""
-    n, d = A.shape
-    acc = np.zeros(n, dtype=np.float64)
-    na = np.zeros(n, dtype=np.float64)
-    nb = np.zeros(n, dtype=np.float64)
-    for j in range(d):
-        a = A[:, j]
-        b = B[:, j]
-        acc += a * b
-        na += a * a
-        nb += b * b
-    with np.errstate(divide="ignore", invalid="ignore"):
-        return acc / np.sqrt(na) / np.sqrt(nb)
-
-
-def _arrow_list_to_2d(col):
-    """Arrow list<float|double> column → (n, d) float64 matrix, or None
-    when the column is ragged / has nulls (caller falls back to the
-    exact per-row fold). Zero-copy flatten: the list values are one
-    contiguous buffer, so no per-row object materialization happens."""
-    import pyarrow as pa
-
-    if pa.types.is_fixed_size_list(col.type):
-        if col.null_count:
-            return None
-        d = col.type.list_size
-        vals = col.values.to_numpy(zero_copy_only=False)
-        return vals.reshape(len(col), d).astype(np.float64, copy=False)
-    offs = col.offsets.to_numpy()
-    widths = np.diff(offs)
-    if col.null_count or len(widths) == 0 or not (widths == widths[0]).all():
-        return None
-    d = int(widths[0])
-    if d == 0:
-        return None
-    vals = col.values.to_numpy(zero_copy_only=False)
-    start = int(offs[0])
-    return (
-        vals[start : start + len(col) * d]
-        .reshape(len(col), d)
-        .astype(np.float64, copy=False)
-    )
+def _cosine(ca, cb):
+    """Exact double-precision cosine dot / |a| / |b| between two array
+    columns, JVM-side (no Python in the hot path) — the reference every
+    numpy fold is checked against."""
+    return _jvm_dot(ca, cb) / _jvm_norm(ca) / _jvm_norm(cb)
 
 
 def _pair_cosine_arrow(df, id1: str, id2: str, a_col: str, b_col: str):
-    """(id1, id2, a_col, b_col) rows → (id1, id2, cosine) where cosine
-    is EXACTLY _cosine(a_col, b_col) (raw, unrounded — callers keep
-    F.round JVM-side), computed batch-vectorized via mapInArrow.
+    """(id1, id2, a_col, b_col) rows of validated vectors → (id1, id2,
+    cosine) where cosine is EXACTLY _cosine(a_col, b_col) (raw,
+    unrounded — callers keep F.round JVM-side), computed
+    batch-vectorized via mapInArrow.
 
     Round 7 (guide §4.2): the per-pair zip_with/aggregate dot fold is
     interpreted Catalyst — ~64 boxed lambda evaluations per pair, and
     the ANN candidate joins score millions of pairs (sf1: ~12M for
     d15). One Arrow crossing of (two ids + two 64-float vectors) per
-    pair feeds a numpy loop over the dim axis instead; the op order is
-    preserved per row (see _cos_fold_f64) so results are bit-identical
-    — this is a pure execution-engine swap, not an algorithm change.
-    Ragged / null vector rows take an exact per-row Python fold with
-    the same op order (never hit on the canonical-dim-filtered ANN
-    paths; kept for safety)."""
-    import math
-
+    pair feeds the numpy fold instead; the op order is preserved per
+    row (see _fold_grid) so results are bit-identical — this is a pure
+    execution-engine swap, not an algorithm change."""
     sel = df.select(id1, id2, a_col, b_col)
 
     def fn(it):
@@ -633,32 +654,10 @@ def _pair_cosine_arrow(df, id1: str, id2: str, a_col: str, b_col: str):
         for batch in it:
             A = _arrow_list_to_2d(batch.column(2))
             B = _arrow_list_to_2d(batch.column(3))
-            if A is not None and B is not None and A.shape == B.shape:
-                cos = _cos_fold_f64(A, B)
-                out = pa.array(cos, type=pa.float64())
-            else:  # exact same fold, row at a time (ragged/null safety)
-                a_rows = batch.column(2).to_pylist()
-                b_rows = batch.column(3).to_pylist()
-                vals: list[float | None] = []
-                for a, b in zip(a_rows, b_rows):
-                    if a is None or b is None:
-                        vals.append(None)
-                        continue
-                    acc = na = nb_ = 0.0
-                    for x, y in zip(a, b):
-                        x = float(x)
-                        y = float(y)
-                        acc = acc + x * y
-                        na = na + x * x
-                        nb_ = nb_ + y * y
-                    da, db_ = math.sqrt(na), math.sqrt(nb_)
-                    v = np.float64(acc)
-                    with np.errstate(divide="ignore", invalid="ignore"):
-                        v = v / np.float64(da) / np.float64(db_)
-                    vals.append(float(v))
-                out = pa.array(vals, type=pa.float64())
+            with np.errstate(divide="ignore", invalid="ignore"):
+                cos = _fold_dots(A.T, B.T) / _fold_norms(A) / _fold_norms(B)
             yield pa.RecordBatch.from_arrays(
-                [batch.column(0), batch.column(1), out],
+                [batch.column(0), batch.column(1), pa.array(cos, type=pa.float64())],
                 names=[id1, id2, "cosine"],
             )
 
@@ -676,7 +675,7 @@ def _cell_topk_cosine(qs, data, key: str, margin: float = 2e-4):
     every vector crosses ONCE per cell it belongs to (data: once,
     queries: nprobe times — ~77 MB at sf1), and one numpy pass per
     cell computes the whole (queries × data) cosine grid with the SAME
-    float64 op order as the JVM fold (see _cos_fold_f64): the dot and
+    float64 op order as the JVM fold (see _fold_grid): the dot and
     both norms accumulate left-to-right over the dim axis, division
     order dot / |data| / |query| — bit-identical doubles.
 
@@ -703,52 +702,11 @@ def _cell_topk_cosine(qs, data, key: str, margin: float = 2e-4):
     def fn(left: pd.DataFrame, right: pd.DataFrame) -> pd.DataFrame:
         if not len(left) or not len(right):
             return pd.DataFrame(_empty)
-        qm = [np.asarray(v, dtype=np.float64) for v in left["qe"]]
-        dm = [np.asarray(v, dtype=np.float64) for v in right["embedding"]]
-        dim0 = qm[0].shape
-        if any(v.shape != dim0 for v in qm) or any(v.shape != dim0 for v in dm):
-            # ragged store: exact per-pair fold (never hit on the
-            # canonical-dim-filtered ANN paths; kept for safety)
-            out_q, out_v, out_c = [], [], []
-            for qi, qv in zip(left["q_id"], qm):
-                for vi, dv in zip(right["vec_id"], dm):
-                    if qi == vi or qv.shape != dv.shape:
-                        continue
-                    acc = na = nb = 0.0
-                    for x, y in zip(dv, qv):
-                        acc = acc + float(x) * float(y)
-                        na = na + float(x) * float(x)
-                        nb = nb + float(y) * float(y)
-                    with np.errstate(divide="ignore", invalid="ignore"):
-                        c = float(
-                            np.float64(acc)
-                            / np.float64(np.sqrt(na))
-                            / np.float64(np.sqrt(nb))
-                        )
-                    out_q.append(int(qi))
-                    out_v.append(int(vi))
-                    out_c.append(c)
-            return pd.DataFrame(
-                {
-                    "q_id": pd.Series(out_q, dtype="int64"),
-                    "vec_id": pd.Series(out_v, dtype="int64"),
-                    "cosine": pd.Series(out_c, dtype="float64"),
-                }
-            )
-        Q = np.stack(qm)
-        Dm = np.stack(dm)
+        Q = _arrow_list_to_2d(left["qe"])
+        Dm = _arrow_list_to_2d(right["embedding"])
         n_q, n_d = len(Q), len(Dm)
-        acc = np.zeros((n_q, n_d), dtype=np.float64)
-        qn = np.zeros(n_q, dtype=np.float64)
-        dn = np.zeros(n_d, dtype=np.float64)
-        for j in range(Q.shape[1]):
-            qj = Q[:, j]
-            dj = Dm[:, j]
-            acc += qj[:, None] * dj[None, :]
-            qn += qj * qj
-            dn += dj * dj
-        with np.errstate(divide="ignore", invalid="ignore"):
-            cos = (acc / np.sqrt(dn)[None, :]) / np.sqrt(qn)[:, None]
+        # data-major grid: division order dot / |data| / |query|
+        cos = _fold_grid(Dm, Q, _fold_norms(Dm), _fold_norms(Q)).T
         q_ids = left["q_id"].to_numpy()
         v_ids = right["vec_id"].to_numpy()
         valid = q_ids[:, None] != v_ids[None, :]
@@ -815,14 +773,7 @@ def _hyperplane_scored_pairs(emb, stats: tuple[int, int, int] | None = None):
     dropped rows are strictly beaten by ≥3 kept same-bucket rows even
     after F.round(·,4), so the global rounded top-3 per query is
     bit-identical while the dedup+window input shrinks ~3×."""
-    import warnings
-
-    n_rows, dim, dropped = emb_stats(emb) if stats is None else stats
-    if dropped:
-        warnings.warn(
-            f"hyperplane ann: {dropped} rows dropped (embedding dim != {dim})",
-            stacklevel=2,
-        )
+    emb, (n_rows, dim, _) = _valid_store(emb, stats, "hyperplane ann")
     n_planes = _adaptive_planes(n_rows)
     e = (
         emb.select(
@@ -832,7 +783,6 @@ def _hyperplane_scored_pairs(emb, stats: tuple[int, int, int] | None = None):
                 "bucket"
             ),
         )
-        .filter(F.col("bucket") >= 0)
         .select("bucket", "vec_id", F.xxhash64("vec_id").alias("h"), "embedding")
         .repartition(F.col("bucket"))
     )
@@ -846,28 +796,17 @@ def _hyperplane_scored_pairs(emb, stats: tuple[int, int, int] | None = None):
 
         bks, idss, hss, embs = [], [], [], []
         for batch in it:
-            E = _arrow_list_to_2d(batch.column(3))
-            if E is None:  # ragged store — cannot happen post-filter,
-                # decode row-wise to keep the exact fold anyway
-                E = np.stack(
-                    [np.asarray(v, dtype=np.float64) for v in batch.column(3).to_pylist()]
-                )
             bks.append(batch.column(0).to_numpy())
             idss.append(batch.column(1).to_numpy())
             hss.append(batch.column(2).to_numpy())
-            embs.append(E)
+            embs.append(_arrow_list_to_2d(batch.column(3)))
         if not bks:
             return
         bk = np.concatenate(bks)
         ids = np.concatenate(idss)
         hs = np.concatenate(hss)
         M = np.vstack(embs)
-        # per-vector norm, exact fold order (see _cos_fold_f64)
-        norm_acc = np.zeros(len(M), dtype=np.float64)
-        for j in range(M.shape[1]):
-            mj = M[:, j]
-            norm_acc += mj * mj
-        norms = np.sqrt(norm_acc)
+        norms = _fold_norms(M)
         # bucket runs + rep rank by (xxhash64, vec_id) inside each run
         order = np.lexsort((ids, hs, bk))  # bucket-major, then hash rank
         bk_s = bk[order]
@@ -893,11 +832,7 @@ def _hyperplane_scored_pairs(emb, stats: tuple[int, int, int] | None = None):
         cos_flat = np.empty(len(mi_runs), dtype=np.float64)
         for s in range(0, len(mi_runs), pair_chunk):
             e2 = min(s + pair_chunk, len(mi_runs))
-            A = MT[:, mi_runs[s:e2]]
-            B = MT[:, ri_runs[s:e2]]
-            acc = np.zeros(e2 - s, dtype=np.float64)
-            for j in range(M.shape[1]):
-                acc += A[j] * B[j]
+            acc = _fold_dots(MT[:, mi_runs[s:e2]], MT[:, ri_runs[s:e2]])
             ia = ids[mi_runs[s:e2]]
             ib = ids[ri_runs[s:e2]]
             n_first = np.where(ia < ib, norms[mi_runs[s:e2]], norms[ri_runs[s:e2]])
@@ -983,15 +918,7 @@ def _matrix_topk_arrow(emb, q_ids, k: int, cos_batch):
         cand_cos: list[list[np.ndarray]] = [[] for _ in range(n_q)]
         for batch in it:
             ids = batch.column(0).to_numpy()
-            X = _arrow_list_to_2d(batch.column(1))
-            if X is None:
-                X = np.stack(
-                    [
-                        np.asarray(v, dtype=np.float64)
-                        for v in batch.column(1).to_pylist()
-                    ]
-                )
-            cos = cos_batch(X)  # (B, n_q) rounded
+            cos = cos_batch(_arrow_list_to_2d(batch.column(1)))  # (B, n_q) rounded
             key = np.where(np.isnan(cos), np.inf, cos)
             key = np.where(ids[:, None] != qid_arr[None, :], key, -np.inf)
             B = len(ids)
@@ -1049,24 +976,17 @@ def _hyperplane_id_pairs(emb, stats: tuple[int, int, int] | None = None):
     out by ingestion time would systematically under-serve newer docs
     in hot buckets — while a hash rank spreads representation uniformly
     over members; vec_id stays as the deterministic tie-break."""
-    import warnings
-
-    # one grouped agg (emb_stats) yields n + dim + dropped together —
-    # the store is scanned ONCE for sizing, not three times (round 6);
+    # one grouped agg (emb_stats) yields n + dim + rejects together —
+    # the store is scanned ONCE for sizing and validation (round 6);
     # n sizes the per-table bucket space (round 5): constant mean
     # occupancy at any n, so candidate volume stays
     # O(n·occupancy·tables) instead of saturating at n·cap·tables
-    n_rows, dim, dropped = emb_stats(emb) if stats is None else stats
-    if dropped:
-        warnings.warn(
-            f"hyperplane ann: {dropped} rows dropped (embedding dim != {dim})",
-            stacklevel=2,
-        )
+    emb, (n_rows, dim, _) = _valid_store(emb, stats, "hyperplane ann")
     n_planes = _adaptive_planes(n_rows)
     e = emb.select(
         "vec_id",
         F.explode(_hyperplane_buckets_udf(dim, n_planes)("embedding")).alias("bucket"),
-    ).filter(F.col("bucket") >= 0)
+    )
     wb = Window.partitionBy("bucket").orderBy(F.xxhash64("vec_id"), "vec_id")
     reps = (
         e.withColumn("rn", F.row_number().over(wb))
@@ -1091,8 +1011,9 @@ def _hyperplane_id_pairs(emb, stats: tuple[int, int, int] | None = None):
 
 def hyperplane_ann(emb):
     """d06's reusable core over any (vec_id, embedding) DataFrame: dim
-    is derived from the data (not hardcoded 64) and wrong-dim rows are
-    counted and warned about, never silently dropped (round-3 fix).
+    is derived from the data (not hardcoded 64) and invalid rows are
+    counted and warned about, never silently dropped (round-3 fix;
+    _valid_store).
     Round 4: candidates come from _hyperplane_id_pairs (ids-only
     shuffle, capped hot buckets); the exact cosine is computed ONCE per
     undirected pair after a slim join-back, then both query directions
@@ -1186,7 +1107,7 @@ def _spherical_kmeans(X: np.ndarray, k: int = None, iters: int = None) -> np.nda
     return C
 
 
-def _ivf_centroids(spark, sf, n: int | None = None) -> np.ndarray:
+def _ivf_centroids(spark, sf, stats: tuple[int, int, int] | None = None) -> np.ndarray:
     """Seeded spherical k-means on a bounded sample — deterministic,
     bounded driver memory at any corpus size. Round 5: k adapts to the
     store (_adaptive_ivf_k) and the sample is the max(_IVF_TRAIN_CAP,
@@ -1194,52 +1115,39 @@ def _ivf_centroids(spark, sf, n: int | None = None) -> np.ndarray:
     hash, so training is uncorrelated with ingestion-time id assignment
     (the d06 bucket-cap ADVICE lesson applied to the trainer; below
     2048 vectors every row is sampled either way, so the measured
-    sf0.001/sf0.01 floors keep their exact round-4 centroids)."""
+    sf0.001/sf0.01 floors keep their exact round-4 centroids). Callers
+    that already sized the store pass its emb_stats (round 6); the
+    sample holds valid rows only."""
     e = t(spark, sf, "embeddings")
-    if n is None:  # callers that already sized the store pass n (round 6)
-        n = e.count()
-    k = _adaptive_ivf_k(n)
+    if stats is None:
+        stats = emb_stats(e)
+    k = _adaptive_ivf_k(stats[0])
     cap = max(_IVF_TRAIN_CAP, 8 * k)
     key = (sf, k, cap)
     if key in _ivf_cache:
         return _ivf_cache[key]
-    # vec_id-sorted sample matrix: k-means seeding indexes into X, so
-    # row order must be deterministic AND, for stores at or under the
-    # cap (= the whole store sampled), identical to the round-4 order —
-    # keeping every measured floor's centroids bit-stable.
-    _, vecs = _collect_id_emb(
-        e.orderBy(F.xxhash64("vec_id"), "vec_id")
-        .limit(cap)
-        .select("vec_id", "embedding")
-    )
-    # Train only on the canonical dim (dim of the first sample vector) —
-    # a stray wrong-dim row must not crash np.stack or skew centroids.
-    X = np.stack([v for v in vecs if v.shape == vecs[0].shape])
-    _ivf_cache[key] = _spherical_kmeans(X, k=k)
+    _ivf_cache[key] = _train_centroids_df(_valid_store(e, stats)[0], k)
     return _ivf_cache[key]
 
 
+def _unit_rows(X: np.ndarray) -> np.ndarray:
+    """Rows scaled to unit length (zero rows stay zero) — the per-row
+    np.linalg.norm keeps the exact doubles every measured IVF floor was
+    taken with."""
+    return X / np.array([max(np.linalg.norm(v), 1e-30) for v in X])[:, None]
+
+
 def _ivf_cells_udf(C: np.ndarray, nprobe: int):
-    """Pandas UDF: embedding → its `nprobe` nearest centroid cells (one
-    batch matmul; centroids ride the closure → shipped once per task)."""
+    """Pandas UDF: validated embedding → its `nprobe` nearest centroid
+    cells (one batch matmul; centroids ride the closure → shipped once
+    per task)."""
 
     @F.pandas_udf(ArrayType(LongType()))
     def cells(embs: pd.Series) -> pd.Series:
-        dim = C.shape[1]
-        out: list[list[int]] = []
-        ok_rows, mats = [], []
-        for i, e in enumerate(embs):
-            v = np.asarray(e, dtype=np.float64)
-            if v.shape == (dim,):
-                ok_rows.append(i)
-                mats.append(v / max(np.linalg.norm(v), 1e-30))
-            out.append([-1])
-        if mats:
-            sims = np.stack(mats) @ C.T
-            top = np.argsort(-sims, axis=1)[:, :nprobe]
-            for row, i in enumerate(ok_rows):
-                out[i] = [int(x) for x in top[row]]
-        return pd.Series(out)
+        if not len(embs):
+            return pd.Series([], dtype=object)
+        sims = _unit_rows(_arrow_list_to_2d(embs)) @ C.T
+        return pd.Series(np.argsort(-sims, axis=1)[:, :nprobe].tolist())
 
     return cells
 
@@ -1262,7 +1170,7 @@ def d15(spark, sf):
         # takes over (round 6 — VERDICT r5 #3); every sf at or below
         # the measured decades stays on the flat path bit-for-bit
         return ivf2_topk(e, stats=stats)
-    return ivf_topk(e, _ivf_centroids(spark, sf, n=stats[0]), stats=stats)
+    return ivf_topk(e, _ivf_centroids(spark, sf, stats), stats=stats)
 
 
 def ivf_topk(e, C: np.ndarray, stats: tuple[int, int, int] | None = None):
@@ -1271,26 +1179,19 @@ def ivf_topk(e, C: np.ndarray, stats: tuple[int, int, int] | None = None):
     cosine re-rank top-3. d29 runs this exact code over the planted
     cluster store where probe coverage makes recall 1.0 by construction,
     licensing a brute-force DuckDB value oracle."""
+    e, _ = _valid_store(e, stats, "IVF ANN")
     home = _ivf_cells_udf(C, 1)
     probe = _ivf_cells_udf(C, _IVF_NPROBE)
-    _, _, dropped = emb_stats(e) if stats is None else stats
-    if dropped:
-        import warnings
-
-        warnings.warn(
-            f"IVF ANN: {dropped} rows dropped (embedding dim != centroid dim)",
-            stacklevel=2,
-        )
     data = e.select(
         "vec_id",
         "embedding",
         F.explode(home("embedding")).alias("cell"),
-    ).filter(F.col("cell") >= 0)
+    )
     qs = e.select(
         F.col("vec_id").alias("q_id"),
         F.col("embedding").alias("qe"),
         F.explode(probe("embedding")).alias("cell"),
-    ).filter(F.col("cell") >= 0)
+    )
     # Round 7 (guide §8): cogroup by cell instead of joining and scoring
     # per pair — vectors cross the exchange once per cell instead of
     # once per candidate pair (sf1: 77 MB instead of 6 GB), the cosine
@@ -1342,17 +1243,16 @@ _IVF2_LEAF_STRIDE = 1 << 20  # leaf id = tcell * STRIDE + sub (k2 << STRIDE)
 
 
 def _train_centroids_df(e, k: int) -> np.ndarray:
-    """_ivf_centroids' trainer generalized to any (vec_id, embedding)
-    DataFrame (no sf-keyed cache): seeded spherical k-means over the
-    max(_IVF_TRAIN_CAP, 8k) lowest-xxhash64 rows, vec_id-sorted so the
-    centroids are deterministic at any parallelism."""
+    """Seeded spherical k-means over the max(_IVF_TRAIN_CAP, 8k)
+    lowest-xxhash64 rows of a validated (vec_id, embedding) DataFrame —
+    a TakeOrdered over a uniform hash, uncorrelated with ingestion-time
+    id assignment. The sample matrix is
+    vec_id-sorted: k-means seeding indexes into it, so row order must be
+    deterministic at any parallelism AND, for stores at or under the cap
+    (= the whole store sampled), identical to the round-4 order —
+    keeping every measured floor's centroids bit-stable."""
     cap = max(_IVF_TRAIN_CAP, 8 * k)
-    _, vecs = _collect_id_emb(
-        e.orderBy(F.xxhash64("vec_id"), "vec_id")
-        .limit(cap)
-        .select("vec_id", "embedding")
-    )
-    X = np.stack([v for v in vecs if v.shape == vecs[0].shape])
+    _, X = _collect_id_emb(e.orderBy(F.xxhash64("vec_id"), "vec_id").limit(cap))
     return _spherical_kmeans(X, k=min(k, len(X)))
 
 
@@ -1373,8 +1273,7 @@ def _ivf2_sub_centroids(data_top, k2: int):
 
     def train(pdf: pd.DataFrame) -> pd.DataFrame:
         pdf = pdf.sort_values("vec_id")
-        vecs = [np.asarray(v, dtype=np.float64) for v in pdf["embedding"]]
-        X = np.stack([v for v in vecs if v.shape == vecs[0].shape])
+        X = _arrow_list_to_2d(pdf["embedding"])
         C = _spherical_kmeans(X, k=min(k2, len(X)))
         return pd.DataFrame(
             {
@@ -1412,25 +1311,16 @@ def _ivf2_assign(vecs_top, subc, nsub: int):
         dim = int(cdf["dim"].iloc[0])
         C = np.asarray(cdf["cents"].iloc[0], dtype=np.float64).reshape(k, dim)
         tcell = int(key[0])
-        ids, embs, mats = [], [], []
-        for vid, emb in zip(vdf["vec_id"], vdf["embedding"]):
-            v = np.asarray(emb, dtype=np.float64)
-            if v.shape == (dim,):
-                ids.append(int(vid))
-                embs.append(v)
-                mats.append(v / max(np.linalg.norm(v), 1e-30))
-        if not ids:
-            return empty
-        sims = np.stack(mats) @ C.T
+        X = _arrow_list_to_2d(vdf["embedding"])
         m = min(nsub, k)
-        top = np.argsort(-sims, axis=1, kind="stable")[:, :m]
-        out_id, out_emb, out_leaf = [], [], []
-        for i in range(len(ids)):
-            for s in top[i]:
-                out_id.append(ids[i])
-                out_emb.append(embs[i].tolist())
-                out_leaf.append(tcell * _IVF2_LEAF_STRIDE + int(s))
-        return pd.DataFrame({"vec_id": out_id, "embedding": out_emb, "leaf": out_leaf})
+        top = np.argsort(-(_unit_rows(X) @ C.T), axis=1, kind="stable")[:, :m]
+        return pd.DataFrame(
+            {
+                "vec_id": np.repeat(vdf["vec_id"].to_numpy(), m),
+                "embedding": np.repeat(X, m, axis=0).tolist(),
+                "leaf": tcell * _IVF2_LEAF_STRIDE + top.ravel().astype(np.int64),
+            }
+        )
 
     return vecs_top.groupby("tcell").cogroup(subc.groupby("tcell")).applyInPandas(
         assign, schema="vec_id long, embedding array<double>, leaf long"
@@ -1450,14 +1340,7 @@ def ivf2_topk(
     4dp and ties broken by vec_id."""
     import math
 
-    n, _dim, dropped = emb_stats(e) if stats is None else stats
-    if dropped:
-        import warnings
-
-        warnings.warn(
-            f"IVF2 ANN: {dropped} rows dropped (embedding dim != canonical)",
-            stacklevel=2,
-        )
+    e, (n, _, _) = _valid_store(e, stats, "IVF2 ANN")
     k_leaf = max(top_probe * sub_probe, n // max(target_cell, 1))
     K1 = min(_IVF_MAX_K, max(2, math.isqrt(max(k_leaf - 1, 1)) + 1))
     k2 = -(-k_leaf // K1)
@@ -1468,12 +1351,12 @@ def ivf2_topk(
     probe = _ivf_cells_udf(C1, min(top_probe, len(C1)))
     data_top = e.select(
         "vec_id", "embedding", F.explode(home("embedding")).alias("tcell")
-    ).filter(F.col("tcell") >= 0)
+    )
     subc = _ivf2_sub_centroids(data_top, k2)
     data = _ivf2_assign(data_top, subc, 1)
     q_top = e.select(
         "vec_id", "embedding", F.explode(probe("embedding")).alias("tcell")
-    ).filter(F.col("tcell") >= 0)
+    )
     qs = _ivf2_assign(q_top, subc, sub_probe).select(
         F.col("vec_id").alias("q_id"),
         F.col("embedding").alias("qe"),
@@ -1501,21 +1384,8 @@ def _exact_top3(spark, sf):
         F.col("vec_id").alias("q_id"), F.col("embedding").alias("qe")
     )
     j = e.crossJoin(F.broadcast(qv)).filter(F.col("vec_id") != F.col("q_id"))
-    dot = F.aggregate(
-        F.zip_with("embedding", "qe", lambda x, y: x.cast("double") * y.cast("double")),
-        F.lit(0.0),
-        lambda acc, v: acc + v,
-    )
-    norm = lambda c: F.sqrt(
-        F.aggregate(
-            F.transform(c, lambda x: x.cast("double") * x.cast("double")),
-            F.lit(0.0),
-            lambda acc, v: acc + v,
-        )
-    )
     sims = j.select(
-        "q_id", "vec_id",
-        (dot / norm(F.col("embedding")) / norm(F.col("qe"))).alias("cosine"),
+        "q_id", "vec_id", _cosine(F.col("embedding"), F.col("qe")).alias("cosine")
     )
     w = Window.partitionBy("q_id").orderBy(F.col("cosine").desc(), F.col("vec_id"))
     return sims.withColumn("rn", F.row_number().over(w)).filter(
@@ -1811,14 +1681,7 @@ def d12(spark, sf):
     exact double-precision cosine >= threshold, all JVM-side. The join
     is per-block, never corpus²."""
     e = t_spread(spark, sf, "embeddings")
-    norm = F.sqrt(
-        F.aggregate(
-            F.transform("embedding", lambda x: x.cast("double") * x.cast("double")),
-            F.lit(0.0),
-            lambda acc, v: acc + v,
-        )
-    )
-    v = e.select("vec_id", "label", "embedding", norm.alias("nrm"))
+    v = e.select("vec_id", "label", "embedding", _jvm_norm("embedding").alias("nrm"))
     a = v.select(
         F.col("vec_id").alias("vec_a"), "label",
         F.col("embedding").alias("ea"), F.col("nrm").alias("na"),
@@ -1828,12 +1691,7 @@ def d12(spark, sf):
         F.col("embedding").alias("eb"), F.col("nrm").alias("nb"),
     )
     j = a.join(b, "label").filter(F.col("vec_b") > F.col("vec_a"))
-    dot = F.aggregate(
-        F.zip_with("ea", "eb", lambda x, y: x.cast("double") * y.cast("double")),
-        F.lit(0.0),
-        lambda acc, v_: acc + v_,
-    )
-    cos = dot / F.col("na") / F.col("nb")
+    cos = _jvm_dot("ea", "eb") / F.col("na") / F.col("nb")
     return j.select("vec_a", "vec_b", F.round(cos, 4).alias("cosine")).filter(
         F.col("cosine") >= 0.30
     )
@@ -3798,101 +3656,53 @@ def _centroid_assign(e):
     """(vec_id, cluster_id, cosine) nearest-centroid assignment against
     the fixed vec_id < _D40_K centroid set, as a map-only projection —
     the shared core of d40 and d42 (see d40's docstring for the scale
-    argument)."""
-    cents = (
-        e.filter(F.col("vec_id") < _D40_K)
-        .select("vec_id", "embedding")
-        .orderBy("vec_id")
-        .collect()
-    )
+    argument). Every row is emitted, so validity is a MASK here, not a
+    filter: the canonical dim is the smallest centroid's (= the smallest
+    id's, the emb_stats rule), a row failing _valid_embedding reaches
+    the kernel as NULL and scores NULL against every centroid, and an
+    invalid centroid scores NULL against every row — the null cosines
+    the JVM fold gives them. An all-NULL row takes the smallest
+    centroid id with cosine NULL.
 
-    def dot_lit(vec):
-        arr = F.array(*[F.lit(float(x)) for x in vec])
-        return F.aggregate(
-            F.zip_with("embedding", arr, lambda x, y: x.cast("double") * y),
-            F.lit(0.0),
-            lambda acc, v: acc + v,
-        )
-
-    def norm_lit(vec):
-        s = 0.0
-        for x in vec:
-            s += float(x) * float(x)
-        return s ** 0.5
-
-    cent_dims = {len(r.embedding) for r in cents if r.embedding is not None}
-    if len(cent_dims) != 1 or any(r.embedding is None for r in cents):
-        # ragged/null centroid set — keep the interpreted-fold JVM path
-        # (the numpy matrix below needs one centroid dim)
-        enorm = F.sqrt(
-            F.aggregate(
-                F.transform("embedding", lambda x: x.cast("double") * x.cast("double")),
-                F.lit(0.0),
-                lambda acc, v: acc + v,
-            )
-        )
-        scored = [
-            F.struct(
-                F.round(
-                    dot_lit(r.embedding) / enorm / F.lit(norm_lit(r.embedding)), 4
-                ).alias("cosine"),
-                F.lit(-int(r.vec_id)).alias("negcid"),
-            )
-            for r in cents
-        ]
-        best = F.greatest(*scored)
-        return e.select(
-            "vec_id",
-            (-best.negcid).cast("bigint").alias("cluster_id"),
-            best.cosine.alias("cosine"),
-        )
-
-    # Round 7 (guide §4.2): the K interpreted 64-term dot folds per row
-    # become ONE Arrow pass emitting the K RAW cosines per row — the
-    # per-dim numpy loop preserves the fold's float64 op order and the
-    # dot / |e| / |c| division order, so each raw double is bit-equal.
-    # Rounding and the (cosine, negcid) greatest tie-break STAY JVM-side
-    # on element_at of the array, so the selection semantics (Spark
-    # HALF_UP round, NaN/null ordering) are byte-for-byte the old ones.
-    # Wrong-dim / null rows return a NULL array: element_at(NULL, i) is
-    # null exactly like the old zip_with null-fold for those rows.
-    dimc = cent_dims.pop()
-    Cm = np.array([[float(x) for x in r.embedding] for r in cents], dtype=np.float64)
-    cnorms = np.array([norm_lit(r.embedding) for r in cents], dtype=np.float64)
+    Round 7 (guide §4.2): the K interpreted 64-term dot folds per row
+    became ONE Arrow pass emitting the K RAW cosines per row through
+    the numpy fold (bit-equal doubles, see _fold_grid). Rounding and
+    the (cosine, negcid) greatest tie-break STAY JVM-side on element_at
+    of the array, so the selection semantics (Spark HALF_UP round,
+    NaN/null ordering) are byte-for-byte the JVM ones."""
     from pyspark.sql.types import DoubleType
 
-    @F.pandas_udf(ArrayType(DoubleType()))
-    def cos_arr(it: Iterator[pd.Series]) -> Iterator[pd.Series]:
-        for embs in it:
-            out: list = []
-            ok_rows, mats = [], []
-            for i, v in enumerate(embs):
-                a = None if v is None else np.asarray(v, dtype=np.float64)
-                if a is not None and a.shape == (dimc,):
-                    ok_rows.append(i)
-                    mats.append(a)
-                out.append(None)
-            if mats:
-                X = np.stack(mats)
-                dots = np.zeros((len(X), len(Cm)), dtype=np.float64)
-                nacc = np.zeros(len(X), dtype=np.float64)
-                for j in range(dimc):
-                    xj = X[:, j]
-                    dots += xj[:, None] * Cm[:, j][None, :]
-                    nacc += xj * xj
-                with np.errstate(divide="ignore", invalid="ignore"):
-                    cos = (dots / np.sqrt(nacc)[:, None]) / cnorms[None, :]
-                for row, i in enumerate(ok_rows):
-                    out[i] = cos[row]
-            yield pd.Series(out)
+    cand = e.filter(F.col("vec_id") < _D40_K)
+    sizes = sorted(cand.select("vec_id", F.size("embedding").alias("dim")).collect())
+    ok = _valid_embedding(next((r["dim"] for r in sizes if r["dim"]), 0))
+    cent_ids, Cm = _collect_id_emb(cand.filter(ok))
+    cnorms = _fold_norms(Cm)
+    k = len(cent_ids)
 
-    proj = e.select("vec_id", cos_arr("embedding").alias("ca"))
+    @F.arrow_udf(ArrayType(DoubleType()))
+    def cos_arr(embs):
+        import pyarrow as pa
+
+        live = embs.is_valid().to_numpy(zero_copy_only=False)
+        X = _arrow_list_to_2d(embs.filter(pa.array(live)))
+        cos = _fold_grid(X, Cm, _fold_norms(X), cnorms)
+        offsets = np.concatenate([[0], np.cumsum(live * k)]).astype(np.int32)
+        return pa.ListArray.from_arrays(
+            pa.array(offsets), pa.array(cos.ravel(), type=pa.float64()), mask=pa.array(~live)
+        )
+
+    proj = e.select("vec_id", cos_arr(F.when(ok, F.col("embedding"))).alias("ca"))
+    pos = {cid: j for j, cid in enumerate(cent_ids)}
     scored = [
         F.struct(
-            F.round(F.element_at("ca", k + 1), 4).alias("cosine"),
-            F.lit(-int(r.vec_id)).alias("negcid"),
+            (
+                F.round(F.element_at("ca", pos[r["vec_id"]] + 1), 4)
+                if r["vec_id"] in pos
+                else F.lit(None).cast("double")
+            ).alias("cosine"),
+            F.lit(-int(r["vec_id"])).alias("negcid"),
         )
-        for k, r in enumerate(cents)
+        for r in sizes
     ]
     best = F.greatest(*scored)
     return proj.select(
@@ -3959,9 +3769,10 @@ def d42(spark, sf):
     on cluster_id (never a cartesian); both cosine rounds happen
     BEFORE the tau compare / argmax so float ulps can't flip a drop
     decision across engines."""
-    asg = _centroid_assign(t(spark, sf, "embeddings"))
     e = t(spark, sf, "embeddings")
-    m = asg.select("vec_id", "cluster_id").join(e, "vec_id")
+    asg = _centroid_assign(e)
+    valid, _ = _valid_store(e, what="semantic dedup")
+    m = asg.select("vec_id", "cluster_id").join(valid, "vec_id")
     # Round 7 (guide §8): the within-cluster pair stage was a self-join
     # on cluster_id scoring every pair with the interpreted fold — at
     # sf1 that is ~25M pairs × 64 interpreted lambdas (measured 107 s).
@@ -3972,9 +3783,8 @@ def d42(spark, sf):
     # since Spark compares NaN above every number). The EXACT filter —
     # F.round(cosine, 4) >= tau on the emitted raw double — stays
     # JVM-side, so the drop-set is bit-identical (d42's value oracle
-    # stays green). Same-dim rows grid together per (cluster, dim);
-    # cross-dim pairs are omitted exactly like the old zip_with
-    # null-fold, whose null cosine never passed the filter.
+    # stays green). Only valid rows enter the pair stage: an invalid
+    # row's JVM fold is null, which never passed the filter.
     dropped = (
         _cluster_pair_candidates(m, _D42_TAU - 1e-3)
         .filter(F.round(F.col("cosine"), 4) >= _D42_TAU)
@@ -3990,12 +3800,11 @@ def d42(spark, sf):
 
 
 def _cluster_pair_candidates(m, floor: float):
-    """(cluster_id, vec_id, embedding) rows → (a_id, b_id, cosine) for
-    every within-cluster pair (a_id < b_id, same embedding dim) whose
-    RAW cosine is >= floor or NaN — the margin superset d42's exact
-    rounded-tau filter then prunes (see d42). Cosines keep the JVM
-    fold's float64 op order exactly (per-dim accumulation, division
-    dot / |a| / |b|)."""
+    """(cluster_id, vec_id, embedding) rows of validated vectors →
+    (a_id, b_id, cosine) for every within-cluster pair (a_id < b_id)
+    whose RAW cosine is >= floor or NaN — the margin superset d42's
+    exact rounded-tau filter then prunes (see d42). Cosines come from
+    the numpy fold (JVM op order, division dot / |a| / |b|)."""
 
     _empty = {
         "a_id": pd.Series([], dtype="int64"),
@@ -4006,46 +3815,25 @@ def _cluster_pair_candidates(m, floor: float):
     def fn(pdf: pd.DataFrame) -> pd.DataFrame:
         if len(pdf) < 2:
             return pd.DataFrame(_empty)
-        ids_all = pdf["vec_id"].to_numpy()
-        embs = [
-            None if v is None else np.asarray(v, dtype=np.float64)
-            for v in pdf["embedding"]
-        ]
-        by_dim: dict[tuple, list[int]] = {}
-        for i, v in enumerate(embs):
-            if v is not None:  # a null embedding's zip_with fold was
-                # null → its pairs never passed the filter
-                by_dim.setdefault(v.shape, []).append(i)
+        ids = pdf["vec_id"].to_numpy()
+        order = np.argsort(ids, kind="stable")
+        ids = ids[order]
+        M = _arrow_list_to_2d(pdf["embedding"])[order]
+        n = len(M)
+        norms = _fold_norms(M)
         out_a, out_b, out_c = [], [], []
-        for shape, idxs in by_dim.items():
-            if len(idxs) < 2 or len(shape) != 1 or shape[0] == 0:
-                continue
-            ids = ids_all[idxs]
-            order = np.argsort(ids, kind="stable")
-            ids = ids[order]
-            M = np.stack([embs[idxs[o]] for o in order])
-            n = len(M)
-            nacc = np.zeros(n, dtype=np.float64)
-            for j in range(M.shape[1]):
-                mj = M[:, j]
-                nacc += mj * mj
-            norms = np.sqrt(nacc)
-            chunk = max(1, (1 << 22) // max(n, 1))  # ~32 MB grid chunks
-            for s in range(0, n - 1, chunk):
-                e_ = min(s + chunk, n - 1)
-                acc = np.zeros((e_ - s, n), dtype=np.float64)
-                for j in range(M.shape[1]):
-                    acc += M[s:e_, j][:, None] * M[:, j][None, :]
-                with np.errstate(divide="ignore", invalid="ignore"):
-                    cos = (acc / norms[s:e_, None]) / norms[None, :]
-                # upper triangle only (a_id < b_id after the id sort)
-                tri = np.arange(s, e_)[:, None] < np.arange(n)[None, :]
-                keep = tri & ((cos >= floor) | np.isnan(cos))
-                ai, bi = np.nonzero(keep)
-                if len(ai):
-                    out_a.append(ids[ai + s])
-                    out_b.append(ids[bi])
-                    out_c.append(cos[ai, bi])
+        chunk = max(1, (1 << 22) // n)  # ~32 MB grid chunks
+        for s in range(0, n - 1, chunk):
+            e_ = min(s + chunk, n - 1)
+            cos = _fold_grid(M[s:e_], M, norms[s:e_], norms)
+            # upper triangle only (a_id < b_id after the id sort)
+            tri = np.arange(s, e_)[:, None] < np.arange(n)[None, :]
+            keep = tri & ((cos >= floor) | np.isnan(cos))
+            ai, bi = np.nonzero(keep)
+            if len(ai):
+                out_a.append(ids[ai + s])
+                out_b.append(ids[bi])
+                out_c.append(cos[ai, bi])
         if not out_a:
             return pd.DataFrame(_empty)
         return pd.DataFrame(
@@ -4525,9 +4313,9 @@ def _pq_encode_udf(books: np.ndarray):
 
     @F.pandas_udf(ArrayType(LongType()))
     def enc(embs: pd.Series) -> pd.Series:
-        X = np.array(embs.to_list(), dtype=np.float64)
-        if X.size == 0:
+        if not len(embs):
             return pd.Series([], dtype=object)
+        X = _arrow_list_to_2d(embs)
         codes = np.empty((X.shape[0], m), dtype=np.int64)
         for b in range(m):
             Xb = X[:, b * dsub : (b + 1) * dsub]
@@ -4601,13 +4389,8 @@ def _pq_books(spark, sf, n: int, dim: int) -> np.ndarray:
     key = (sf, dim, ksub, cap)
     if key in _pq_cache:
         return _pq_cache[key]
-    e = t(spark, sf, "embeddings").filter(F.size("embedding") == dim)
-    _, vecs = _collect_id_emb(
-        e.orderBy(F.xxhash64("vec_id"), "vec_id")
-        .limit(cap)
-        .select("vec_id", "embedding")
-    )
-    X = np.array(vecs, dtype=np.float64)
+    e = t(spark, sf, "embeddings").filter(_valid_embedding(dim))
+    _, X = _collect_id_emb(e.orderBy(F.xxhash64("vec_id"), "vec_id").limit(cap))
     _pq_cache[key] = _pq_train(X, m=_PQ_M, ksub=ksub)
     return _pq_cache[key]
 
@@ -4626,15 +4409,9 @@ def d46(spark, sf):
     LSH/IVF prune CANDIDATES, PQ shrinks the per-candidate cost — a
     production system composes them; here PQ runs as a full compressed
     scan so its recall is measured in isolation."""
-    e = t_spread(spark, sf, "embeddings")
-    n, dim, dropped = emb_stats(e)
-    if dropped:
-        e = e.filter(F.size("embedding") == dim)
+    e, (n, dim, _) = _valid_store(t_spread(spark, sf, "embeddings"), what="PQ ANN")
     books = _pq_books(spark, sf, n, dim)
-    q_ids, qvecs = _collect_id_emb(
-        e.filter(F.col("vec_id") < _RECALL_QUERIES).select("vec_id", "embedding")
-    )
-    Q = np.array(qvecs, dtype=np.float64)
+    q_ids, Q = _collect_id_emb(e.filter(F.col("vec_id") < _RECALL_QUERIES))
     return pq_refined_topk(e, Q, q_ids, books)
 
 
@@ -4776,21 +4553,9 @@ def _exact_refine(e, short, queries: np.ndarray, q_ids: list, k: int):
         short.join(e.select("vec_id", "embedding"), "vec_id")
         .join(F.broadcast(qdf), "q_id")
     )
-    dot = F.aggregate(
-        F.zip_with("embedding", "qe", lambda x, y: x.cast("double") * y.cast("double")),
-        F.lit(0.0),
-        lambda acc, v: acc + v,
-    )
-    norm = lambda c: F.sqrt(
-        F.aggregate(
-            F.transform(c, lambda x: x.cast("double") * x.cast("double")),
-            F.lit(0.0),
-            lambda acc, v: acc + v,
-        )
-    )
     sims = j.select(
         "q_id", "vec_id",
-        F.round(dot / norm(F.col("embedding")) / norm(F.col("qe")), 4).alias("cosine"),
+        F.round(_cosine(F.col("embedding"), F.col("qe")), 4).alias("cosine"),
     )
     w = Window.partitionBy("q_id").orderBy(F.col("cosine").desc(), F.col("vec_id"))
     return (
@@ -4851,13 +4616,10 @@ def ivfpq_topk(
     bN = spark.sparkContext.broadcast(norms2)
 
     home = _ivf_cells_udf(C, 1)
-    coded = (
-        e.select(
-            "vec_id",
-            F.explode(home("embedding")).alias("cell"),
-            _pq_encode_udf(books)("embedding").alias("codes"),
-        )
-        .filter(F.col("cell") >= 0)
+    coded = e.select(
+        "vec_id",
+        F.explode(home("embedding")).alias("cell"),
+        _pq_encode_udf(books)("embedding").alias("codes"),
     )
 
     @F.pandas_udf("double")
@@ -4885,23 +4647,7 @@ def ivfpq_topk(
         .select("q_id", "vec_id")
     )
     # exact refine: only shortlist rows' raw vectors are read back
-    qdf = spark.createDataFrame(
-        [(int(q), [float(x) for x in v]) for q, v in zip(q_ids, Q)],
-        "q_id long, qe array<double>",
-    )
-    jr = short.join(e.select("vec_id", "embedding"), "vec_id").join(
-        F.broadcast(qdf), "q_id"
-    )
-    sims = jr.select(
-        "q_id", "vec_id",
-        F.round(_cosine(F.col("embedding"), F.col("qe")), 4).alias("cosine"),
-    )
-    w2 = Window.partitionBy("q_id").orderBy(F.col("cosine").desc(), F.col("vec_id"))
-    return (
-        sims.withColumn("rn", F.row_number().over(w2))
-        .filter(F.col("rn") <= k)
-        .select("q_id", "vec_id", "cosine")
-    )
+    return _exact_refine(e, short, Q, q_ids, k)
 
 
 @q("d49_ann_ivfpq")  # ⊘ rows-only BY DESIGN (doubly approximate: IVF
@@ -4913,16 +4659,11 @@ def d49(spark, sf):
     probed-cell equi join over 8-byte codes; shortlist 32 → exact
     refine. The composition a 10^11-vector deployment actually runs:
     d06/d15 prune candidates OR d46 compresses — this op does both."""
-    e = t_spread(spark, sf, "embeddings")
-    n, dim, dropped = emb_stats(e)
-    if dropped:
-        e = e.filter(F.size("embedding") == dim)
-    C = _ivf_centroids(spark, sf, n=n)
+    e, stats = _valid_store(t_spread(spark, sf, "embeddings"), what="IVFPQ ANN")
+    n, dim, _ = stats
+    C = _ivf_centroids(spark, sf, stats)
     books = _pq_books(spark, sf, n, dim)
-    q_ids, qvecs = _collect_id_emb(
-        e.filter(F.col("vec_id") < _RECALL_QUERIES).select("vec_id", "embedding")
-    )
-    Q = np.array(qvecs, dtype=np.float64)
+    q_ids, Q = _collect_id_emb(e.filter(F.col("vec_id") < _RECALL_QUERIES))
     return ivfpq_topk(e, C, books, Q, q_ids)
 
 
@@ -6542,67 +6283,48 @@ _SQ8_SHORTLIST = 32
 
 
 def sq8_minmax(e, dim: int) -> tuple[np.ndarray, np.ndarray]:
-    """Per-dimension (min, max) in ONE scan: numpy partial min/max per
-    partition via mapInArrow, combined driver-side — min/max are
-    order-independent so the values are exactly the old 2·dim
-    element_at agg's (which was measured ~1 s of interpreted-expression
-    overhead at sf1 for 128 agg columns). Spark NaN semantics are
-    reproduced explicitly: NaN ranks above every double, so a NaN
-    element wins max and never wins min. A ragged store falls back to
-    the JVM agg (element_at yields null past the end, which min/max
-    skip). At 100 TB this remains the cheapest full-scan agg there is
-    — map-side partials, 2·dim doubles per partition."""
+    """Per-dimension (min, max) of a validated store in ONE scan: numpy
+    partial min/max per partition via mapInArrow, combined driver-side
+    — min/max are order-independent so the values are exactly the old
+    2·dim element_at agg's (which was measured ~1 s of
+    interpreted-expression overhead at sf1 for 128 agg columns). Spark
+    NaN semantics are reproduced explicitly: NaN ranks above every
+    double, so a NaN element wins max and never wins min. At 100 TB
+    this remains the cheapest full-scan agg there is — map-side
+    partials, 2·dim doubles per partition."""
 
     def fn(it):
+        import warnings
+
         import pyarrow as pa
 
         mn_p = np.full(dim, np.inf)
         mx_p = np.full(dim, -np.inf)
         has_nan = np.zeros(dim, dtype=bool)
-        ragged = False
         n_seen = 0
         for batch in it:
             X = _arrow_list_to_2d(batch.column(0))
-            if X is None or X.shape[1] != dim:
-                ragged = True
-                break
+            if not len(X):
+                continue
             n_seen += len(X)
-            with np.errstate(invalid="ignore"):
-                import warnings as _w
-
-                with _w.catch_warnings():
-                    _w.simplefilter("ignore", RuntimeWarning)
-                    mn_p = np.fmin(mn_p, np.nanmin(X, axis=0))
-                    mx_p = np.fmax(mx_p, np.nanmax(X, axis=0))
+            with warnings.catch_warnings():
+                warnings.simplefilter("ignore", RuntimeWarning)
+                mn_p = np.fmin(mn_p, np.nanmin(X, axis=0))
+                mx_p = np.fmax(mx_p, np.nanmax(X, axis=0))
             has_nan |= np.isnan(X).any(axis=0)
         yield pa.RecordBatch.from_arrays(
             [
-                pa.array([1 if ragged else 0], type=pa.int32()),
                 pa.array([[float(x) for x in mn_p]], type=pa.list_(pa.float64())),
                 pa.array([[float(x) for x in mx_p]], type=pa.list_(pa.float64())),
                 pa.array([[bool(x) for x in has_nan]], type=pa.list_(pa.bool_())),
                 pa.array([n_seen], type=pa.int64()),
             ],
-            names=["ragged", "mn", "mx", "nan", "n"],
+            names=["mn", "mx", "nan", "n"],
         )
 
     parts = e.select("embedding").mapInArrow(
-        fn, "ragged int, mn array<double>, mx array<double>, nan array<boolean>, n long"
+        fn, "mn array<double>, mx array<double>, nan array<boolean>, n long"
     ).collect()
-    if any(r["ragged"] for r in parts):
-        row = e.agg(
-            *[
-                F.min(F.element_at("embedding", i + 1)).alias(f"mn{i}")
-                for i in range(dim)
-            ],
-            *[
-                F.max(F.element_at("embedding", i + 1)).alias(f"mx{i}")
-                for i in range(dim)
-            ],
-        ).collect()[0]
-        mn = np.array([row[f"mn{i}"] for i in range(dim)], dtype=np.float64)
-        mx = np.array([row[f"mx{i}"] for i in range(dim)], dtype=np.float64)
-        return mn, mx
     live = [r for r in parts if r["n"]]
     if not live:
         return np.full(dim, np.nan), np.full(dim, np.nan)
@@ -6676,15 +6398,9 @@ def d72(spark, sf):
     compression path a hot 100-TB serving tier uses (no codebook drift,
     re-encode is a pure map). Recall vs the d05 exact twin is gated in
     tests/test_dataops_session4.py."""
-    e = t_spread(spark, sf, "embeddings")
-    _n, dim, dropped = emb_stats(e)
-    if dropped:
-        e = e.filter(F.size("embedding") == dim)
+    e, (_, dim, _) = _valid_store(t_spread(spark, sf, "embeddings"), what="SQ8 ANN")
     mn, mx = sq8_minmax(e, dim)
-    q_ids, qvecs = _collect_id_emb(
-        e.filter(F.col("vec_id") < _RECALL_QUERIES).select("vec_id", "embedding")
-    )
-    Q = np.array(qvecs, dtype=np.float64)
+    q_ids, Q = _collect_id_emb(e.filter(F.col("vec_id") < _RECALL_QUERIES))
     return sq8_refined_topk(e, Q, q_ids, mn, mx)
 
 

@@ -196,8 +196,19 @@ def _extract_media_batch(widths, heights, fmts, datas) -> list:
         grays[i] = g
         groups.setdefault(g.shape, []).append(i)
     for shape, idxs in groups.items():
-        stack = np.stack([grays[i] for i in idxs])
-        masks = denoise_batch(adaptive_threshold_batch(stack))
+        try:
+            masks = denoise_batch(
+                adaptive_threshold_batch(np.stack([grays[i] for i in idxs]))
+            )
+        except Exception:
+            # a degenerate image (e.g. a 0×0 decode) must not fail its
+            # group: run the group through the per-image path instead
+            for i in idxs:
+                try:
+                    out[i] = extract_table(grays[i]) or None
+                except Exception:
+                    out[i] = None
+            continue
         for j, i in enumerate(idxs):
             try:
                 out[i] = extract_table_from_mask(masks[j]) or None
